@@ -78,12 +78,7 @@ object Bench {
       catch { case _: Throwable => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
-    def clearState(): Unit = if (!keepState) {
-      queries.Text.clearCaches(spark)
-      queries.Tokenize.clearCaches(spark)
-      queries.Vectors.clearIndexCache(spark)
-      queries.Relational.clearBucketedCache(spark)
-    }
+    def clearState(): Unit = if (!keepState) engine.SessionMemo.clear(spark)
     def pass(): (Map[String, Double], Double, Double) = {
       val g0 = gcMillis
       val l0 = loadAvg

@@ -2,16 +2,16 @@ package graft.engine
 
 /** One JVM-wide shutdown-hook reap set for derived on-disk state under
   * tmpdir (VERDICT r18 wrong #1): the bucketed signature indexes
-  * (`graft_t26_idx_*`, `graft_t28_relidx_*`, `graft_s10_exh_*`), the
-  * IVF index roots and the JSONL fixture are rebuildable derived state
-  * — `clearCaches`/`clearIndexCache` delete them in-session, but a JVM
-  * that exits without calling them (a crashed run, a ^C'd bench, a
-  * one-shot tool) previously left corpus-scale parquet behind (the
-  * x1000 signature index is GBs). Every creation site registers its
-  * path here at birth; ONE hook (the jsonl pattern — a hook per entry
-  * would accumulate across sessions) deletes whatever remains at exit.
-  * In-session deletion stays with the clear functions; re-deleting an
-  * already-cleared path at exit is a no-op.
+  * (`graft_t26_idx_*`, `graft_t28_relidx_*`, `graft_s10_exh_*`, ...),
+  * the IVF index roots and the JSONL fixture are rebuildable derived
+  * state — in-session, releasing their [[SessionMemo]] entry (a
+  * `SessionMemo.clear`) deletes them, but a JVM that exits without a
+  * clear (a crashed run, a ^C'd bench, a one-shot tool) previously left
+  * corpus-scale parquet behind (the x1000 signature index is GBs).
+  * Every creation site registers its path here at birth; ONE hook (the
+  * jsonl pattern — a hook per entry would accumulate across sessions)
+  * deletes whatever remains at exit. A memo release deletes its path
+  * and unregisters it, so the set holds only live paths.
   */
 object TempReaper {
   private val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

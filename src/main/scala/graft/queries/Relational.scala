@@ -367,27 +367,17 @@ object Relational {
   /** One-time bucketed write of the events projection + even-gid dimension
     * (8 buckets on gid, one file per bucket), memoized per (session, dir).
     */
-  private val bucketCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), (String, String, String)]
-
-  private val sessionTokens =
-    scala.collection.concurrent.TrieMap.empty[org.apache.spark.sql.SparkSession, String]
+  private val Memo = graft.engine.SessionMemo.namespace("relational")
+  private val bucketCache = Memo.store[String, (String, String, String)](
+    "bucketed")(v => Seq(v._1, v._2), _._3)
+  private val sessionTokens = Memo.forget[Unit, String]("session_token")
 
   /** Drop this session's memoized bucketed tables (catalog entries +
     * cache keys) AND their temp files — the store path is stable per
     * (session, dir), so a multi-pass bench that clears between passes
     * rewrites in place instead of leaking one full copy per pass.
-    * Same lifecycle hook as Text.clearCaches / Vectors.clearIndexCache.
     */
-  def clearBucketedCache(s: org.apache.spark.sql.SparkSession): Unit = {
-    bucketCache.keys.filter(_._1 eq s).foreach { k =>
-      bucketCache.remove(k).foreach { case (t1, t2, base) =>
-        Seq(t1, t2).foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
-        graft.engine.MultiAnalyzer.deleteRecursively(new java.io.File(base))
-      }
-    }
-    sessionTokens.remove(s)
-  }
+  def clearBucketedCache(s: org.apache.spark.sql.SparkSession): Unit = Memo.clear(s)
 
   private def bucketedTables(s: org.apache.spark.sql.SparkSession, dir: String): (String, String) = {
     val (t1, t2, _) = bucketCache.getOrElseUpdate((s, dir), {
@@ -404,7 +394,7 @@ object Relational {
       // concurrent JVMs could land on the same value — sharing one live
       // store path means overwrite-under-reader. 64 random bits per
       // session are unique across sessions AND processes.
-      val sess = sessionTokens.getOrElseUpdate(s,
+      val sess = sessionTokens.getOrElseUpdate((s, ()),
         java.lang.Long.toHexString(
           java.util.concurrent.ThreadLocalRandom.current().nextLong()))
       // stable per-(session, dir) path: rebuilds overwrite in place

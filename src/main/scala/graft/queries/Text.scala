@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   */
 object Text {
 
+  private val Memo = graft.engine.SessionMemo.namespace("text")
+
   /** doc_id + lowercase whitespace tokens. */
   private def toks(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
@@ -247,12 +249,10 @@ object Text {
     * repeated runs in one session) share ONE persisted copy instead of
     * stacking fresh InMemoryRelations in the block manager.
     */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val shingleCache = Memo.frame[String]("shingles")
   private def persistedShingles(s: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, dir),
-      timedBuild(s, "shingles")(
-        shingles(s, dir, 3).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    shingleCache.getOrElseUpdate((s, dir), materialized(
+      shingles(s, dir, 3).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
 
   /** The 8-gram POSTING-LIST state for the exact-substring tier (r21):
     * (shingle → dfreq + the ≤50 smallest doc ids) plus the per-doc gram
@@ -270,13 +270,12 @@ object Text {
     * persist alongside rather than re-aggregating the gram frame per
     * call. Same clearCaches lifecycle as the other pipeline frames.
     */
-  private val posts8Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val posts8Cache =
+    Memo.frames[String, (DataFrame, DataFrame)]("posts8")(v => Seq(v._1, v._2))
   private def persistedPosts8(
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
     posts8Cache.getOrElseUpdate((s, dir), {
       graft.functions.GraftFunctions.register(s)
-      val t0 = System.nanoTime()
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // one tokenize+distinct pass feeds both aggregates, then the raw
       // gram frame is dropped — only the two derived frames stay pinned
@@ -290,7 +289,6 @@ object Text {
       val n = g.groupBy("doc_id").agg(count(lit(1)).as("ng")).persist(lvl)
       n.count()
       g.unpersist()
-      buildSecs.put((s, "posts8"), (System.nanoTime() - t0) / 1e9)
       (posts, n)
     })
 
@@ -299,36 +297,27 @@ object Text {
     */
   private val T19DfCap = 50
 
-  /** Per-stage build seconds for the dedup pipeline's persisted frames.
-    * The first consumer still pays the build inside its own wall time, but
-    * the cost is now ATTRIBUTED: Bench reports `pipeline_build` from this
-    * map so t11's cold number stops absorbing shingles+candidates+scoring,
-    * and a regression localizes to a stage. The timed `count()` also makes
-    * the build eager, so the persisted frame is complete before the first
-    * consumer's plan runs (same total work, one attribution boundary).
+  /** Eager build of a persisted pipeline frame: complete before the first
+    * consumer's plan runs, so the build is timed in its memo slot, not in
+    * that consumer's wall time (same total work, one attribution boundary).
     */
-  private val buildSecs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Double]
-  private def timedBuild(s: SparkSession, stage: String)(df: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    df.count()
-    buildSecs.put((s, stage), (System.nanoTime() - t0) / 1e9)
-    df
-  }
-  def buildTimings(s: SparkSession): Map[String, Double] =
-    buildSecs.collect { case ((ss, stage), sec) if ss eq s => stage -> sec }.toMap
+  private def materialized(df: DataFrame): DataFrame = { df.count(); df }
+
+  /** Build seconds per memo slot (nested slot builds excluded): Bench
+    * reports `pipeline_build` from it, so t11's cold number stops absorbing
+    * shingles+candidates+scoring and a regression localizes to a stage.
+    */
+  def buildTimings(s: SparkSession): Map[String, Double] = Memo.buildSeconds(s)
 
   /** LSH candidate pairs, persisted + memoized: t6 consumes them directly
     * and [[scoredPairs]] builds on them (same cache policy as the shingle
     * frame — one copy per (session, dir)).
     */
-  private val candCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val candCache = Memo.frame[String]("candidates")
   private def persistedCandidates(s: SparkSession, dir: String): DataFrame =
-    candCache.getOrElseUpdate((s, dir),
-      timedBuild(s, "candidates")(
-        lshCandidates(persistedShingles(s, dir))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    candCache.getOrElseUpdate((s, dir), materialized(
+      lshCandidates(persistedShingles(s, dir))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
 
   /** Jaccard-scored candidate pairs (doc1, doc2, jaccard) — the expensive
     * shingle-intersection join computed ONCE and shared by t7 (≥0.5
@@ -336,8 +325,7 @@ object Text {
     * this is the dominant stage of the dedup pipeline; recomputing it per
     * consumer would triple the corpus-scale join work.
     */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val pairCache = Memo.frame[String]("scored_pairs")
   private def scoredPairs(s: SparkSession, dir: String): DataFrame =
     pairCache.getOrElseUpdate((s, dir), {
       val sh = persistedShingles(s, dir)
@@ -347,7 +335,7 @@ object Text {
       val b = sh.select(col("doc_id").as("doc2"), col("shingle"))
       val inter = cand.join(a, "doc1").join(b, Seq("doc2", "shingle"))
         .groupBy("doc1", "doc2").agg(count(lit(1)).as("ic"))
-      timedBuild(s, "scored_pairs")(inter
+      materialized(inter
         .join(n.select(col("doc_id").as("doc1"), col("ns").as("na")), "doc1")
         .join(n.select(col("doc_id").as("doc2"), col("ns").as("nb")), "doc2")
         .select(col("doc1"), col("doc2"),
@@ -367,8 +355,7 @@ object Text {
     * fixed band count decays recall exponentially, the exact defect the
     * x10 v9 sweep measured on the hyperplane family.
     */
-  private val depthCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Int, Int)]
+  private val depthCache = Memo.forget[String, (Int, Int)]("depth")
   private def autoRowsFor(s: SparkSession, dir: String): (Int, Int) =
     depthCache.getOrElseUpdate((s, dir), {
       // probe on the deterministic id-hash HALF of the corpus — the
@@ -404,8 +391,8 @@ object Text {
     * classes are intact. Returns the frame with its band count (the
     * drop gate's denominator). Cleared by [[clearCaches]].
     */
-  private val autoBucketCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Int)]
+  private val autoBucketCache =
+    Memo.frames[String, (DataFrame, Int)]("auto_buckets")(v => Seq(v._1))
   private def persistedAutoBuckets(
       s: SparkSession, dir: String): (DataFrame, Int) =
     autoBucketCache.getOrElseUpdate((s, dir), {
@@ -416,8 +403,7 @@ object Text {
         bands)
     })
 
-  private val depthCacheXx =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Int, Int)]
+  private val depthCacheXx = Memo.forget[String, (Int, Int)]("depth_xx")
   private def autoRowsForXx(s: SparkSession, dir: String): (Int, Int) =
     depthCacheXx.getOrElseUpdate((s, dir), {
       val depth = autoRowsPerBand(
@@ -427,51 +413,13 @@ object Text {
       (depth, Lsh.bandsForRecall(NearDupJaccard, depth, 1.0 - 1e-6))
     })
 
-  /** Drop this session's persisted text-pipeline frames (shingles,
-    * candidates, scored pairs) and the memoized depth choice. For
-    * long-lived sessions that process many corpora: each (session, dir)
-    * pair holds one persisted copy until cleared — call between corpora
-    * to release block-manager memory.
+  /** Release this session's memoized text state: unpersist its frames,
+    * drop its index tables and delete their dirs, forget its measured
+    * choices. For long-lived sessions that process many corpora: each
+    * (session, dir) pair holds one persisted copy until cleared — call
+    * between corpora to release block-manager memory and tmp.
     */
-  def clearCaches(s: SparkSession): Unit = {
-    depthCache.keys.filter(_._1 eq s).foreach(depthCache.remove(_): Unit)
-    depthCacheXx.keys.filter(_._1 eq s).foreach(depthCacheXx.remove(_): Unit)
-    autoBucketCache.keys.filter(_._1 eq s).foreach { k =>
-      autoBucketCache.remove(k).foreach(_._1.unpersist())
-    }
-    Seq(shingleCache, candCache, pairCache, simhashCache, deconCache)
-      .foreach { m =>
-        m.keys.filter(_._1 eq s).foreach { k =>
-          m.remove(k).foreach(_.unpersist())
-        }
-      }
-    posts8Cache.keys.filter(_._1 eq s).foreach { k =>
-      posts8Cache.remove(k).foreach { case (p, n) => p.unpersist(); n.unpersist(); () }
-    }
-    rerankCache.keys.filter(_._1 eq s).foreach { k =>
-      rerankCache.remove(k).foreach { case (_, path) =>
-        graft.engine.TempReaper.unregister(path)
-        graft.engine.MultiAnalyzer.deleteRecursively(new java.io.File(path))
-      }
-    }
-    buildSecs.keys.filter(_._1 eq s).foreach(buildSecs.remove)
-    idxCapStats.keys.filter(_._1 eq s).foreach(idxCapStats.remove(_): Unit)
-    jsonlDirs.keys.filter(_._1 eq s).foreach(jsonlDirs.remove(_): Unit)
-    Seq(idxCache, exhCache).foreach { c =>
-      c.keys.filter(_._1 eq s).foreach { k =>
-        c.remove(k).foreach { case (_, name, path, _) =>
-          s.sql(s"DROP TABLE IF EXISTS `$name`")
-          graft.engine.MultiAnalyzer.deleteRecursively(new java.io.File(path))
-        }
-      }
-    }
-    releaseIdxCache.keys.filter(_._1 eq s).foreach { k =>
-      releaseIdxCache.remove(k).foreach { case (_, name, path, _) =>
-        s.sql(s"DROP TABLE IF EXISTS `$name`")
-        graft.engine.MultiAnalyzer.deleteRecursively(new java.io.File(path))
-      }
-    }
-  }
+  def clearCaches(s: SparkSession): Unit = Memo.clear(s)
 
   /** Persisted corpus LSH signature index for incremental dedup (t26),
     * bucketed by the flattened band key `bk = band|bkey`: the corpus pays
@@ -481,15 +429,17 @@ object Text {
     * signatures move. At 100 TB this is the production dedup shape: the
     * corpus index is maintained, not recomputed per arriving shard.
     */
-  private val idxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, String, String, Int)]
+  private val idxCache = indexSlot("t26_index")
+
+  /** A persisted bucketed index per corpus: (scan, table, dir, buckets). */
+  private def indexSlot(name: String) =
+    Memo.store[String, (DataFrame, String, String, Int)](name)(v => Seq(v._2), _._3)
 
   /** (dropped signature rows, max pre-cap bucket) observed at each index
     * build — TextIncrementalIndexSpec asserts dropped == 0 at gate scale,
     * which is what licenses the uncapped full-recompute oracle.
     */
-  private[graft] val idxCapStats =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Long, Long)]
+  private[graft] val idxCapStats = Memo.forget[String, (Long, Long)]("idx_cap_stats")
 
   /** Bucket count for the persisted signature index, sized with the
     * corpus — ~500k signature rows (docs × bands) per bucket, floor 8.
@@ -737,8 +687,9 @@ object Text {
     sys.env.get("GRAFT_T28_CANDS")
       .orElse(sys.props.get("graft.t28.cands")).getOrElse("index")
 
-  private val releaseIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), (DataFrame, String, String, Int)]
+  private val releaseIdxCache =
+    Memo.store[(String, Int, Int), (DataFrame, String, String, Int)](
+      "t28_release_index")(v => Seq(v._2), _._3)
 
   /** Build counter for the reuse-liveness spec (one build per (session,
     * corpus, banding) is the asserted contract).
@@ -757,7 +708,7 @@ object Text {
     */
   private def releaseSigIndex(
       s: SparkSession, dir: String, bands: Int, depth: Int): DataFrame =
-    releaseIdxCache.getOrElseUpdate((s, dir, bands, depth), {
+    releaseIdxCache.getOrElseUpdate((s, (dir, bands, depth)), {
       releaseIdxBuilds.incrementAndGet()
       val docs = Tables.documents(s, dir)
       val buckets = indexBuckets(docs.count())
@@ -766,11 +717,9 @@ object Text {
       val name = s"graft_t28_relidx_$tok"
       val path = s"${System.getProperty("java.io.tmpdir")}/$name"
       graft.engine.TempReaper.register(path)
-      val t0 = System.nanoTime()
       graft.sources.Bucketed.writePrepared(
         cappedIndexFrame(rowLshKeysXxAt(docs, bands, depth), buckets),
         name, path, buckets, Seq("bk"), Seq("bk", "doc_id"))
-      buildSecs.put((s, "t28_release_index"), (System.nanoTime() - t0) / 1e9)
       (graft.sources.Bucketed.table(s, name), name, path, buckets)
     })._1
 
@@ -816,8 +765,7 @@ object Text {
 
   private def incrementalIndexIn(
       s: SparkSession, dir: String,
-      cache: scala.collection.concurrent.TrieMap[
-        (SparkSession, String), (DataFrame, String, String, Int)],
+      cache: graft.engine.SessionMemo.Slot[String, (DataFrame, String, String, Int)],
       tag: String,
       postBuild: String => Unit = _ => ()): (DataFrame, Int) = {
     val t = cache.getOrElseUpdate((s, dir), {
@@ -831,14 +779,12 @@ object Text {
       val name = s"graft_${tag}_idx_$tok"
       val path = s"${System.getProperty("java.io.tmpdir")}/$name"
       graft.engine.TempReaper.register(path)
-      val t0 = System.nanoTime()
       // capped frame is already partitioned to the exact bucket spec —
       // writePrepared skips the second corpus-sized exchange
       val obs = org.apache.spark.sql.Observation(s"graft_${tag}_index_cap_$tok")
       graft.sources.Bucketed.writePrepared(
         cappedIndexFrame(corpus, buckets, obs = Some(obs)), name, path,
         buckets, Seq("bk"), Seq("bk", "doc_id"))
-      buildSecs.put((s, s"${tag}_index"), (System.nanoTime() - t0) / 1e9)
       // pin the cap's correctness contract: a capped (dropped > 0) build
       // is VALID at corpus scale but diverges from an uncapped-recompute
       // oracle by design — surface it loudly, and record the stats so
@@ -876,15 +822,13 @@ object Text {
     * occupancy cap: bucket fan-in is the hash function's own balance,
     * not data skew.
     */
-  private val exhCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, String, String, Int)]
+  private val exhCache = indexSlot("s10_index")
   private def exactHashIndex(s: SparkSession, dir: String): (DataFrame, Int) =
     exactHashIndexIn(s, dir, exhCache, "s10")
 
   private def exactHashIndexIn(
       s: SparkSession, dir: String,
-      cache: scala.collection.concurrent.TrieMap[
-        (SparkSession, String), (DataFrame, String, String, Int)],
+      cache: graft.engine.SessionMemo.Slot[String, (DataFrame, String, String, Int)],
       tag: String,
       postBuild: String => Unit = _ => ()): (DataFrame, Int) = {
     val t = cache.getOrElseUpdate((s, dir), {
@@ -923,10 +867,8 @@ object Text {
   // appearing as a near-dup/contamination source (t29/s19), while the
   // indexes are never rebuilt. ----
 
-  private val delIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, String, String, Int)]
-  private val delExhCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, String, String, Int)]
+  private val delIdxCache = indexSlot("t29_index")
+  private val delExhCache = indexSlot("s18_index")
 
   /** The two-wave takedown over a maintained index's corpus rows. */
   private def textTakedown(s: SparkSession, dir: String, name: String): Unit = {
@@ -1011,8 +953,7 @@ object Text {
     * reaped by a shutdown hook. This is the t25 fixture — the corpus AS a
     * training pipeline receives it.
     */
-  private val jsonlDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val jsonlDirs = Memo.forget[String, String]("jsonl")
   private lazy val jvmToken = java.lang.Long.toHexString(
     java.util.concurrent.ThreadLocalRandom.current().nextLong())
   // exit-reaped via the JVM-wide TempReaper set (one hook; a hook per
@@ -1086,12 +1027,10 @@ object Text {
     * scale (a first bench cut measured t20 at 22.5 s from exactly that
     * duplication; memoized it is ~1 s).
     */
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val simhashCache = Memo.frame[String]("simhash")
   private def simhashFrame(s: SparkSession, dir: String): DataFrame =
-    simhashCache.getOrElseUpdate((s, dir),
-      timedBuild(s, "simhash")(
-        simhashBuild(s, dir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    simhashCache.getOrElseUpdate((s, dir), materialized(
+      simhashBuild(s, dir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
 
   private def simhashBuild(s: SparkSession, dir: String): DataFrame = {
     // The vote as 64 flat sum columns over the token rows, NOT a ×64
@@ -2576,17 +2515,16 @@ object Text {
     * (the ring may evict the intermediate est/cand paths; the memo's
     * verdict file must live until [[clearCaches]], which deletes it).
     */
-  private val rerankCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Boolean, Int, Double),
-      (DataFrame, String)]
+  private val rerankCache =
+    Memo.store[(String, Int, Int, Boolean, Int, Double), (DataFrame, String)](
+      "t28b_rerank")(_ => Nil, _._2)
 
   private[graft] def scoredPairsAt(
       s: SparkSession, dir: String, bands: Int, depth: Int,
       oracleKeys: Boolean = true): DataFrame = {
     val w = sys.env.get("GRAFT_T28_SIGW").map(_.toInt).getOrElse(64)
     val eps = sys.env.get("GRAFT_T28_EPS").map(_.toDouble).getOrElse(0.30)
-    rerankCache.getOrElseUpdate((s, dir, bands, depth, oracleKeys, w, eps), {
-      val t0 = System.nanoTime()
+    rerankCache.getOrElseUpdate((s, (dir, bands, depth, oracleKeys, w, eps)), {
       val scored = rerankAt(s, dir, bands, depth, oracleKeys)._3
       val path = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft-t28b-scored-${jvmToken}_n${estNonce.incrementAndGet()}"
@@ -2596,7 +2534,6 @@ object Text {
       // and the upstream re-rank compute is no longer collapsed into the
       // single writer task the way coalesce(1) propagates up
       scored.hint("rebalance").write.mode("overwrite").parquet(path)
-      buildSecs.put((s, "t28b_rerank"), (System.nanoTime() - t0) / 1e9)
       (s.read.parquet(path), path)
     })._1
   }
@@ -2915,8 +2852,7 @@ object Text {
     * the stage moves ~1 row per corpus doc instead of ~50 shingle rows,
     * twice.
     */
-  private val deconCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val deconCache = Memo.frame[String]("decon")
   private def contaminatedDocs(s: SparkSession, dir: String): DataFrame =
     deconCache.getOrElseUpdate((s, dir), {
       val docs = Tables.documents(s, dir)
@@ -2932,7 +2868,7 @@ object Text {
         docs.filter(col("doc_id") % 50 === 0).select("doc_id").count()
       val benchSide =
         if (benchDocs <= 5000000L) broadcast(benchSh) else benchSh
-      timedBuild(s, "decon")(
+      materialized(
         explodedWithNs(docs.filter(col("doc_id") % 50 =!= 0))
           .join(benchSide, "shingle")
           .groupBy("doc_id")

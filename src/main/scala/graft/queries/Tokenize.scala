@@ -48,9 +48,10 @@ object Tokenize {
   /** t16b's context length in TOKENS. */
   val TokenBudget = 512
 
-  private val encCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (Bpe.Encoder, org.apache.spark.broadcast.Broadcast[Bpe.Encoder])]
+  private val Memo = graft.engine.SessionMemo.namespace("tokenize")
+  private val encCache =
+    Memo.slot[String, (Bpe.Encoder, org.apache.spark.broadcast.Broadcast[Bpe.Encoder])](
+      "encoder")((_, v) => v._2.destroy())
 
   /** Path to a PUBLISHED merges.txt artifact (`GRAFT_BPE_MERGES` / prop
     * `graft.bpe.merges`): when set, the engine tokenizes with the
@@ -132,10 +133,7 @@ object Tokenize {
       .as[(String, Long)].collect()
   }
 
-  def clearCaches(s: SparkSession): Unit =
-    encCache.keys.filter(_._1 eq s).foreach { k =>
-      encCache.remove(k).foreach(_._2.destroy())
-    }
+  def clearCaches(s: SparkSession): Unit = Memo.clear(s)
 
   private val tokSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("source", StringType),

@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   */
 object Vectors {
 
+  private val Memo = graft.engine.SessionMemo.namespace("vectors")
+
   /** Dot product of two array<float> columns in double, sequential order —
     * the fused codegen [[graft.functions.ArrayDot]] expression (bit-equal
     * to the aggregate/zip_with composition, no intermediate array).
@@ -124,8 +126,7 @@ object Vectors {
     // every signature if the corpus changed
     val dims = emb.select(size(col("embedding"))).head.getInt(0)
     require(dims > 0, "embeddings table has empty embedding arrays")
-    val planes = hyperplaneMatrix(bands * planesPerBand, dims)
-    val bc = emb.sparkSession.sparkContext.broadcast(planes)
+    val bc = planesBroadcast(emb.sparkSession, bands * planesPerBand, dims)
     import org.apache.spark.sql.graftshim.ColumnShim
     emb
       .select(col("vec_id"),
@@ -134,6 +135,18 @@ object Vectors {
           .as("b"))
       .select(col("vec_id"), col("b.band").as("band"), col("b.bkey").as("bkey"))
   }
+
+  /** The plane matrix broadcast, memoized per (session, nPlanes, dims):
+    * one broadcast per shape instead of one per call. Released with
+    * `unpersist`, not `destroy` — a frame built before a clear may still
+    * run, and re-ships the matrix on demand.
+    */
+  private val planesCache =
+    Memo.slot[(Int, Int), org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]](
+      "planes")((_, bc) => bc.unpersist())
+  private def planesBroadcast(s: SparkSession, nPlanes: Int, dims: Int) =
+    planesCache.getOrElseUpdate((s, (nPlanes, dims)),
+      s.sparkContext.broadcast(hyperplaneMatrix(nPlanes, dims)))
 
   /** The md5-derived ±1 plane matrix (nPlanes × dims) both engines
     * regenerate statelessly — coefficient (p, d) is +1 iff the first hex
@@ -302,8 +315,10 @@ object Vectors {
     * partition pruning). Cells are the label clusters, matching v5's
     * coarse quantizer.
     */
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val ivfCache = rootSlot("ivf_index")
+
+  /** Index roots per corpus: deleted (and unregistered) on release. */
+  private def rootSlot(name: String) = Memo.store[String, String](name)(_ => Nil, identity)
 
   /** Cosine-scored 4×4-banding LSH candidate pairs, persisted + memoized —
     * the vector-family analog of Text.scoredPairs: v2 (≥0.4 re-rank), v8
@@ -311,8 +326,7 @@ object Vectors {
     * signature + bucket + re-rank stages; recomputing them per consumer
     * triples the dominant corpus-scale join of the vector dedup pipeline.
     */
-  private val vecPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val vecPairCache = Memo.frame[String]("vec_pairs")
   private def scoredVecPairs(s: SparkSession, dir: String): DataFrame =
     vecPairCache.getOrElseUpdate((s, dir),
       lshSimilarPairs(Tables.embeddings(s, dir), bands = 4, planesPerBand = 4,
@@ -343,8 +357,8 @@ object Vectors {
     * literal plane arrays, a real per-call Catalyst cost). Returns the
     * frame with its band count (the drop gate's denominator).
     */
-  private val autoSigCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Int)]
+  private val autoSigCache =
+    Memo.frames[String, (DataFrame, Int)]("auto_sig")(v => Seq(v._1))
   private def persistedAutoSig(
       s: SparkSession, dir: String): (DataFrame, Int) =
     autoSigCache.getOrElseUpdate((s, dir), {
@@ -364,8 +378,8 @@ object Vectors {
     * per-dimension join shape went super-linear in the x1000 study).
     * Cleared by clearIndexCache with the other vector frames.
     */
-  private val centArrCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Long)]
+  private val centArrCache =
+    Memo.frames[String, (DataFrame, Long)]("cent_arr")(v => Seq(v._1))
   private def persistedCentArr(
       s: SparkSession, dir: String): (DataFrame, Long) =
     centArrCache.getOrElseUpdate((s, dir), {
@@ -384,8 +398,7 @@ object Vectors {
       (centArr, centArr.count())
     })
 
-  private val depthCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Int, Int)]
+  private val depthCache = Memo.forget[String, (Int, Int)]("depth")
   private def autoPlanesFor(s: SparkSession, dir: String): (Int, Int) =
     depthCache.getOrElseUpdate((s, dir), {
       val emb = Tables.embeddings(s, dir)
@@ -423,40 +436,13 @@ object Vectors {
       (bestDepth, bestBands)
     })
 
-  /** Forget this session's built IVF index paths and memoized pair/depth
-    * frames (the next search rebuilds), and DELETE the index dirs — they
-    * are rebuildable derived state, and leaving one behind per
-    * clear/rebuild cycle grows tmp unboundedly in a long-lived session
+  /** Release this session's memoized vector state (the next search
+    * rebuilds): unpersist its frames and broadcasts, and DELETE its index
+    * roots — they are rebuildable derived state, and leaving one behind
+    * per clear/rebuild cycle grows tmp unboundedly in a long-lived session
     * (pinned by TempStoreLifecycleSpec).
     */
-  def clearIndexCache(s: SparkSession): Unit = {
-    Seq(ivfCache, ivfIncrCache, residLivingCache).foreach { m =>
-      m.keys.filter(_._1 eq s).foreach { k =>
-        m.remove(k).foreach(p =>
-          graft.engine.MultiAnalyzer.deleteRecursively(new java.io.File(p)))
-      }
-    }
-    pqCache.keys.filter(_._1 eq s).foreach { k =>
-      pqCache.remove(k).foreach { case (c, d, _) => c.unpersist(); d.unpersist(); () }
-    }
-    vecPairCache.keys.filter(_._1 eq s).foreach { k =>
-      vecPairCache.remove(k).foreach(_.unpersist())
-    }
-    autoSigCache.keys.filter(_._1 eq s).foreach { k =>
-      autoSigCache.remove(k).foreach(_._1.unpersist())
-    }
-    centArrCache.keys.filter(_._1 eq s).foreach { k =>
-      centArrCache.remove(k).foreach(_._1.unpersist())
-    }
-    idxCentCache.keys.filter(_._1 eq s).foreach(idxCentCache.remove(_): Unit)
-    depthCache.keys.filter(_._1 eq s).foreach(depthCache.remove(_): Unit)
-    curveCache.keys.filter(_._1 eq s).foreach(curveCache.remove(_): Unit)
-    residPqCache.keys.filter(_._1 eq s).foreach { k =>
-      residPqCache.remove(k).foreach { case (_, _, codes, _, _) =>
-        codes.unpersist(); ()
-      }
-    }
-  }
+  def clearIndexCache(s: SparkSession): Unit = Memo.clear(s)
 
   /** The persisted index root, for specs that drive it from a streaming
     * plan (the gates go through the GQuery front door).
@@ -476,7 +462,7 @@ object Vectors {
     val p = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"$prefix$tok")
     java.nio.file.Files.createDirectories(p)
-    // exit-reaped derived state: a JVM that dies without clearIndexCache
+    // exit-reaped derived state: a JVM that dies without clearing the memo
     // must not leave an index root in tmp (VERDICT r18 wrong #1)
     graft.engine.TempReaper.register(p.toString)
     p.toString
@@ -496,8 +482,7 @@ object Vectors {
     * table is written exactly once at build time, so a path-keyed count
     * can never go stale; cleared with the index caches.
     */
-  private val idxCentCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Long)]
+  private val idxCentCache = Memo.forget[String, (DataFrame, Long)]("idx_cent")
   private def indexCentroids(
       s: SparkSession, root: String): (DataFrame, Long) =
     idxCentCache.getOrElseUpdate((s, root), {
@@ -957,15 +942,14 @@ object Vectors {
     * plan construction (ADVICE r17). [[writeRecallCurve]] invalidates
     * on rewrite. None = the index has no persisted curve.
     */
-  private val curveCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[Seq[CurvePoint]]]
+  private val curveCache = Memo.forget[String, Option[Seq[CurvePoint]]]("curve")
 
   // cache keys fold through canonicalRoot like the maintenance lock
   // (ADVICE r18 #2): aliased spellings of one root must hit one entry,
   // and an invalidation through any spelling must evict it
   private def invalidateCurve(idx: String): Unit = {
     val key = canonicalRoot(idx)
-    curveCache.keys.filter(_._2 == key).foreach(curveCache.remove(_): Unit)
+    curveCache.removeKeys(_ == key)
   }
 
   /** Read counter for the memoization spec (one listing per index per
@@ -1135,8 +1119,7 @@ object Vectors {
     * delta staged→flushed (appended files), the other half left staged,
     * original cell files untouched.
     */
-  private val ivfIncrCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val ivfIncrCache = rootSlot("ivf_incr")
   /** The maintained index root, for specs driving the living-index
     * streaming probe (the gates go through the GQuery front door).
     */
@@ -1205,8 +1188,7 @@ object Vectors {
       s: SparkSession, dir: String, out: String): Unit =
     buildMaintainedIndex(s, dir, out)
 
-  private val ivfTombCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val ivfTombCache = rootSlot("ivf_tomb")
 
   /** v18/s16's index: the v13 maintained index with a TAKEDOWN applied —
     * every `vec_id % 7 = 2` deleted, half (`% 14 = 2`, all base rows)
@@ -3139,8 +3121,9 @@ object Vectors {
       s: SparkSession, dir: String): (DataFrame, DataFrame, Array[(Int, Int, Seq[Double])]) =
     pqEncode(s, dir)
 
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, Array[(Int, Int, Seq[Double])])]
+  private val pqCache =
+    Memo.frames[String, (DataFrame, DataFrame, Array[(Int, Int, Seq[Double])])](
+      "pq")(v => Seq(v._1, v._2))
 
   /** Train the PQ codebooks and encode the corpus, memoized + persisted
     * per (session, dir): returns (codesArr(vec_id, cell, carr[8]),
@@ -3265,8 +3248,7 @@ object Vectors {
     * `GRAFT_OPQ_SAMPLE` / prop `graft.opq.sample`, default 4096 — R is
     * 64×64; FAISS trains OPQ on a subset the same way).
     */
-  private val opqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Opq.Result]
+  private val opqCache = Memo.forget[String, Opq.Result]("opq")
   private[graft] def opqFor(s: SparkSession, dir: String): Opq.Result =
     opqCache.getOrElseUpdate((s, dir),
       Opq.train(embSample(s, dir), PqM, PqK, iters = 4, lloydIters = PqIters))
@@ -3449,11 +3431,11 @@ object Vectors {
     * ADC (v10's scope); the IVF-composed variants price through
     * [[graft.tools.PqVariantsProfile]].
     */
-  private val pqMCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
+  private val pqMCache =
+    Memo.frames[(String, Int), (DataFrame, DataFrame)]("pq_m")(v => Seq(v._1, v._2))
   private def pqEncodeM(
       s: SparkSession, dir: String, m: Int): (DataFrame, DataFrame) =
-    pqMCache.getOrElseUpdate((s, dir, m), {
+    pqMCache.getOrElseUpdate((s, (dir, m)), {
       val sub = (PqM * PqSub) / m // embedding dim / m
       val sv = pqSubVectorsKeyed(
         Tables.embeddings(s, dir).select("vec_id", "embedding"),
@@ -3826,9 +3808,9 @@ object Vectors {
        |  FROM approx)
        |WHERE rk <= 3""".stripMargin
 
-  private val residPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (DataFrame, Long, DataFrame, DataFrame, Array[(Int, Int, Seq[Double])])]
+  private val residPqCache =
+    Memo.frames[String, (DataFrame, Long, DataFrame, DataFrame, Array[(Int, Int, Seq[Double])])](
+      "resid_pq")(v => Seq(v._3))
 
   /** The memoized residual-PQ state, for specs that drive it from a
     * streaming plan (the gates go through the GQuery front door).
@@ -3843,9 +3825,7 @@ object Vectors {
     */
   private[graft] def invalidateResidualSession(
       s: SparkSession, root: String): Unit =
-    residPqCache.remove((s, canonicalRoot(root))).foreach {
-      case (_, _, codes, _, _) => codes.unpersist(); ()
-    }
+    residPqCache.remove((s, canonicalRoot(root)))
 
   /** Residual-tier TRAININGS this JVM performed — the no-retrain proof:
     * a process that opens a root whose residual artifacts already exist
@@ -4007,8 +3987,7 @@ object Vectors {
     }
   }
 
-  private val residLivingCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val residLivingCache = rootSlot("resid_living")
 
   /** The living-residual root, for specs driving the v17/s15 serving
     * paths directly (the gates go through the GQuery front door).
@@ -4067,8 +4046,7 @@ object Vectors {
       s: SparkSession, dir: String, out: String): Unit =
     buildResidualLivingRoot(s, dir, out)
 
-  private val residTombCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val residTombCache = rootSlot("resid_tomb")
 
   /** v19/s17's root: the v17 living-residual index with the same
     * takedown as [[ivfTombstoneIndex]] — `% 14 = 2` vacuumed (residual

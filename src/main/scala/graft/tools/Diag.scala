@@ -50,10 +50,7 @@ object Diag {
     val sc = spark.sparkContext
     println(s"[diag] persisted RDDs: ${sc.getPersistentRDDs.size}")
     sample("state-resident")
-    graft.queries.Text.clearCaches(spark)
-    graft.queries.Tokenize.clearCaches(spark)
-    graft.queries.Vectors.clearIndexCache(spark)
-    graft.queries.Relational.clearBucketedCache(spark)
+    graft.engine.SessionMemo.clear(spark)
     System.gc()
     println(s"[diag] persisted RDDs after clear: ${sc.getPersistentRDDs.size}")
     sample("state-cleared")

@@ -4,17 +4,19 @@ import graft.queries.{Relational, Text, Vectors}
 import java.io.File
 
 /** The session temp-store lifecycle, end to end: every gate that persists
-  * derived state under java.io.tmpdir (t25 jsonl fixture, t26 signature
-  * index, j10 bucketed tables, v7/v13 IVF indexes) must leave tmp FLAT
-  * across clear/rebuild cycles — a long-lived session that processes many
-  * corpora must not grow the disk by one store copy per pass. r13 only
-  * exercised j10's reap path; this pins all five families at once.
+  * derived state under java.io.tmpdir (t25 jsonl fixture, t26/s10 and
+  * their t29/s18 takedown indexes, j10 bucketed tables, v7/v13 IVF
+  * indexes and their v18/v19 takedown roots) must leave tmp — and the
+  * exit reap set — FLAT across clear/rebuild cycles: a long-lived session
+  * that processes many corpora must not grow the disk by one store copy
+  * per pass.
   */
 class TempStoreLifecycleSpec extends SparkSuite {
 
   private val Reaped =
     Seq("graft_t26_idx_", "graft_s10_exh_", "graft-bucketed-",
-      "graft-ivf-index", "graft-ivf-incr")
+      "graft-ivf-index", "graft-ivf-incr", "graft-ivf-tomb", "graft-resid-tomb",
+      "graft_t29_idx_", "graft_s18_exh_")
   // the jsonl fixture is stable per (JVM, dir) and overwritten in place;
   // it is reaped by the JVM shutdown hook, not by clearCaches
   private val Stable = Seq("graft-jsonl-")
@@ -37,7 +39,9 @@ class TempStoreLifecycleSpec extends SparkSuite {
   private def runGates(): Unit =
     Seq("t25_jsonl_ingest", "t26_incremental_dedup", "s10_stream_admission",
         "j10_bucketed_colocated",
-        "v7_ivf_persisted", "v13_ivf_incremental").foreach { q =>
+        "v7_ivf_persisted", "v13_ivf_incremental",
+        "v18_ivf_tombstone_delete", "v19_residual_tombstone",
+        "t29_incremental_dedup_deleted", "s18_stream_admission_deleted").foreach { q =>
       assert(SparkEntry.queries(q)(spark, sf0001).count() > 0, s"$q returned no rows")
     }
 
@@ -137,6 +141,11 @@ class TempStoreLifecycleSpec extends SparkSuite {
     clearAll()
     runGates(); clearAll()
     val after1 = snap()
+    // the exit reap set under this suite's tmpdir: a clear unregisters
+    // what it deletes, so only the stable jsonl path may stay listed
+    val tmp = System.getProperty("java.io.tmpdir")
+    def reapSet() = graft.engine.TempReaper.registered.filter(_.startsWith(tmp))
+    val reg1 = reapSet()
     // rebuild: each reaped family materializes exactly one fresh store
     // (new random token / temp dir per build), the jsonl fixture reuses
     // its stable path
@@ -153,5 +162,9 @@ class TempStoreLifecycleSpec extends SparkSuite {
     val after2 = snap()
     assert(after2 == after1,
       s"temp stores grew across a clear/rebuild cycle: $after1 -> $after2")
+    val reg2 = reapSet()
+    assert(reg2.size <= reg1.size,
+      s"reap set grew across a clear/rebuild cycle: ${reg1.size} -> ${reg2.size}, " +
+        s"new: ${(reg2 -- reg1).mkString(", ")}")
   }
 }
