@@ -121,8 +121,8 @@ final class Analyzer(
   /** Scope the report to a features spec's windows/neuron_classes (P6 —
     * reference: features.py:473-515 `_filter_by_value`).
     */
-  private def scoped(spec: FeaturesSpec): DataFrame = {
-    var r = rawDf("report")
+  private def scoped(report: DataFrame, spec: FeaturesSpec): DataFrame = {
+    var r = report
     if (spec.windows.nonEmpty) r = r.filter(col("window").isin(spec.windows: _*))
     if (spec.neuronClasses.nonEmpty)
       r = r.filter(col("neuron_class").isin(spec.neuronClasses: _*))
@@ -134,13 +134,18 @@ final class Analyzer(
     * checksum (C2's per-FeaturesConfig keys, cache.py:378-382).
     */
   def calculateFeatures(): LazyFrames = {
+    // computed over the raw (stored-filter) frames so cached outputs cover
+    // the cache's full row set; narrowing applies on the way out. Read
+    // once per call and shared by every spec.
+    lazy val report = rawDf("report")
+    lazy val windows = rawDf("windows")
+    lazy val neurons = rawDf("neurons")
+    lazy val neuronClasses = rawDf("neuron_classes")
     val raw: Seq[(String, () => DataFrame, String)] = cfg.features.flatMap { spec =>
       val fn = FeatureFns.resolve(spec.function)
-      // computed over the raw (stored-filter) frames so cached outputs
-      // cover the cache's full row set; narrowing applies on the way out
       val ctx = FeatureCtx(
-        spark, spec.groupby, spec.params, scoped(spec),
-        rawDf("windows"), rawDf("neurons"), rawDf("neuron_classes"))
+        spark, spec.groupby, spec.params, scoped(report, spec),
+        windows, neurons, neuronClasses)
       val specSum = ConfigIO.checksum(Seq(chain("report"), Describe.features(spec)))
       fn.computeLazy(ctx).map { case (outName, thunk) =>
         (s"$outName${spec.suffix}", thunk, specSum)

@@ -2,7 +2,9 @@ package graft.engine
 
 import graft.dsl._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Canonical, order-stable description of config pieces for checksumming
   * (the reference checksums YAML dumps — cache.py:288-304; a Scala Map's
@@ -114,19 +116,41 @@ final class CacheManager(
     }
   def close(): Unit = lockChannel.foreach(_.close())
 
-  // manifest: name -> checksum (flat JSON of strings)
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+  // manifest: flat JSON object of strings — `<kind>/<name>` -> config
+  // checksum, `#files` -> stored-file digest, `#schema` -> the parquet
+  // schema's JSON (so a hit reads with `.schema(...)`, no inference job)
   private var manifest: Map[String, String] = loadManifest()
   private def loadManifest(): Map[String, String] =
     if (!Files.exists(manifestPath)) Map.empty
-    else {
-      val txt = Files.readString(manifestPath)
-      """"([^"]+)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2)).toMap
-    }
-  private def saveManifest(): Unit = {
-    val json = manifest.toSeq.sorted
-      .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
-    Files.writeString(manifestPath, json)
+    else
+      try {
+        val node = mapper.readTree(manifestPath.toFile)
+        require(node.isObject, "not a JSON object")
+        node.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          // a torn or hand-truncated manifest must not brick the cache:
+          // every entry misses, so each frame is rebuilt and re-recorded
+          CacheManager.log.warn(
+            s"unparsable cache manifest $manifestPath (${e.getMessage}); " +
+              "treating it as empty and rebuilding")
+          Map.empty
+      }
+  private def saveManifest(): Unit =
+    writeAtomically(manifestPath, mapper.writeValueAsString(
+      scala.collection.immutable.TreeMap(manifest.toSeq: _*)))
+
+  /** Temp sibling + rename, so a reader (or a crash) never sees a
+    * truncated-then-rewritten file. Only the lock holder writes, so one
+    * fixed temp name per target suffices.
+    */
+  private def writeAtomically(target: Path, text: String): Unit = {
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
   }
 
   // the hdf store keeps the reference's .h5 extension (store/hdf.py:24-25)
@@ -139,11 +163,10 @@ final class CacheManager(
     * flat file; a parquet store is a directory of parts.
     */
   private def filesDigest(p: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
     val dir = Paths.get(p)
-    if (Files.isRegularFile(dir))
-      return md.digest(Files.readAllBytes(dir)).map("%02x".format(_)).mkString
+    if (Files.isRegularFile(dir)) return fileMd5(dir).map("%02x".format(_)).mkString
     if (!Files.isDirectory(dir)) return ""
+    val md = java.security.MessageDigest.getInstance("MD5")
     // names are hashed relative to the parquet dir so moving/renaming a
     // cache directory keeps entries valid as long as contents are intact
     val stream = Files.list(dir)
@@ -159,10 +182,22 @@ final class CacheManager(
     for (f <- files.filterNot(n =>
         n.endsWith(".crc") || n.startsWith("_") || n.startsWith("."))) {
       md.update(f.getBytes("UTF-8"))
-      md.update(java.security.MessageDigest.getInstance("MD5")
-        .digest(Files.readAllBytes(dir.resolve(f))))
+      md.update(fileMd5(dir.resolve(f)))
     }
     md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** MD5 of one file, streamed through a fixed buffer: a stored part is
+    * never pulled whole into the driver heap.
+    */
+  private def fileMd5(f: Path): Array[Byte] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val in = new java.security.DigestInputStream(Files.newInputStream(f), md)
+    try {
+      val buf = new Array[Byte](1 << 16)
+      while (in.read(buf) != -1) {}
+    } finally in.close()
+    md.digest()
   }
 
   /** Load `name` if its config checksum AND stored-file digest match;
@@ -192,13 +227,22 @@ final class CacheManager(
     def bucketTable = "graft_cache_" + java.security.MessageDigest
       .getInstance("MD5").digest(s"$dir/$key".getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString
+    // the schema recorded at write time: a hit launches no inference job
+    def schema(): StructType = manifest.get(s"$key#schema") match {
+      case Some(js) => DataType.fromJson(js).asInstanceOf[StructType]
+      case None =>
+        // a manifest written before schemas were recorded: infer once
+        val s = spark.read.parquet(p).schema
+        manifest += s"$key#schema" -> s.json
+        if (!readonly) saveManifest()
+        s
+    }
     def load(): DataFrame = (storeType, bucketed) match {
       case ("feather", _) => graft.sources.FeatherIO.read(spark, p)
       case ("hdf", _) => graft.sources.PandasHdf.read(spark, p, Some(name))
       case (_, Some((n, keys))) =>
-        graft.sources.Bucketed.register(
-          spark, bucketTable, p, n, keys, spark.read.parquet(p).schema)
-      case _ => spark.read.parquet(p)
+        graft.sources.Bucketed.register(spark, bucketTable, p, n, keys, schema())
+      case _ => spark.read.schema(schema()).parquet(p)
     }
     val fresh = manifest.get(key).contains(chainEff) && Files.exists(Paths.get(p)) &&
       manifest.get(s"$key#files").forall(_ == filesDigest(p))
@@ -216,6 +260,8 @@ final class CacheManager(
         }
         manifest += key -> chainEff
         manifest += s"$key#files" -> filesDigest(p)
+        if (storeType == "parquet")
+          manifest += s"$key#schema" -> spark.read.parquet(p).schema.json
         saveManifest()
         load()
       } else df
@@ -231,16 +277,18 @@ final class CacheManager(
   // The dict form of the simulations filter the cached frames were built
   // with, stored beside the manifest (C3 state).
   private val filterPath = Paths.get(dir, "filter.json")
-  private val yaml = new com.fasterxml.jackson.databind.ObjectMapper()
-    .registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
 
   def loadStoredFilterDict(): Option[Any] =
     if (!Files.exists(filterPath)) None
-    else Some(yaml
+    else Some(mapper
       .readValue(Files.readString(filterPath), classOf[Map[String, Any]])
       .getOrElse("filter", null))
 
   def saveStoredFilterDict(dict: Any): Unit =
     if (!readonly)
-      Files.writeString(filterPath, ConfigIO.canonical(Map("filter" -> dict)))
+      writeAtomically(filterPath, ConfigIO.canonical(Map("filter" -> dict)))
+}
+
+object CacheManager {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[CacheManager])
 }

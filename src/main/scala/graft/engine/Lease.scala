@@ -52,6 +52,14 @@ object Lease {
     */
   private[graft] val Unreadable: (String, Long) = ("<unreadable>", Long.MaxValue)
 
+  /** What [[read]] returns for a torn file: an expired corpse. */
+  private[graft] val Torn: (String, Long) = ("", Long.MinValue)
+
+  /** Pause before a renewer re-reads a torn stamp: a rewrite in flight
+    * (create truncates, then writes) finishes well inside it.
+    */
+  private val TornRereadMs = 20L
+
   /** The (owner, expiryMs) of a lease file: None iff the file is
     * ABSENT. A file that exists but is torn — empty (a crash between
     * create and write), missing its expiry line, or unparsable — reads
@@ -84,11 +92,11 @@ object Lease {
       new String(bytes, "UTF-8").split("\n", 3) match {
         case Array(o, e, _*) if o.nonEmpty && e.trim.nonEmpty =>
           Some((o, e.trim.toLong))
-        case _ => Some(("", Long.MinValue)) // torn: an expired corpse
+        case _ => Some(Torn)
       }
     } catch {
       case _: java.io.FileNotFoundException => None
-      case _: NumberFormatException => Some(("", Long.MinValue)) // torn: expired
+      case _: NumberFormatException => Some(Torn)
     }
 
   private def write(
@@ -181,6 +189,39 @@ object Lease {
       case _ => () // not ours, or ours-but-expired (steal-able garbage)
     }
 
+  /** After a failed renew: is the lease genuinely lost? renew()==false is
+    * AMBIGUOUS — genuine loss (another owner holds it, or the file is
+    * gone) vs a transient store blip (the read surfaced Unreadable, the
+    * overwrite itself threw, or the read caught a rewrite between its
+    * truncate and its write). Re-read to distinguish: a false-positive
+    * loss would tell the operator a fully-successful maintenance op
+    * raced a second writer, on the strength of one 5xx or one torn read.
+    */
+  private[graft] def renewLost(
+      fs: FileSystem, path: Path, owner: String, ttlMs: Long,
+      now: () => Long): Boolean = {
+    val stamp = read(fs, path) match {
+      case Some(Torn) =>
+        // a rewrite in flight reads as an empty file: look once more
+        // after a pause; a torn stamp that persists is a corpse
+        try Thread.sleep(TornRereadMs)
+        catch { case _: InterruptedException => return false } // stopping
+        read(fs, path)
+      case r => r
+    }
+    stamp match {
+      case Some((o, exp)) if o == owner =>
+        // still ours: the renew WRITE blipped. Retry the re-stamp once;
+        // even if that fails, the lease is lost only when the on-disk
+        // stamp has ALREADY expired (steal-able now).
+        !write(fs, path, owner, now() + ttlMs, overwrite = true) && exp < now()
+      case Some((o, _)) if o == Unreadable._1 =>
+        false // store unreadable: transient — retry next cycle
+      case _ =>
+        true // another owner, absent, or torn: stolen after an expiry
+    }
+  }
+
   /** Blocking acquire (the flock semantics maintenance callers expect:
     * the op should WAIT, not error), a renewal daemon at ttl/3 while
     * `body` runs, release after. `acquireTimeoutMs` bounds the wait
@@ -207,36 +248,17 @@ object Lease {
       while (!stop.get()) {
         try Thread.sleep(math.max(1L, ttlMs / 3))
         catch { case _: InterruptedException => stop.set(true) }
-        if (!stop.get() && !renew(fs, path, owner, ttlMs, now)) {
-          // renew()==false is AMBIGUOUS: genuine loss (another owner
-          // holds it, or the file is gone) vs a transient store blip
-          // (the read surfaced Unreadable, or the overwrite itself
-          // threw). Re-read to distinguish — a false-positive loss
-          // would tell the operator a fully-successful maintenance op
-          // raced a second writer, on the strength of one 5xx.
-          val genuinelyLost = read(fs, path) match {
-            case Some((o, exp)) if o == owner =>
-              // still ours: the renew WRITE blipped. Retry the re-stamp
-              // once; even if that fails, the lease is lost only when
-              // the on-disk stamp has ALREADY expired (steal-able now).
-              !write(fs, path, owner, now() + ttlMs, overwrite = true) &&
-                exp < now()
-            case Some((o, _)) if o == Unreadable._1 =>
-              false // store unreadable: transient — retry next cycle
-            case _ =>
-              true // another owner, or absent: stolen after an expiry
-          }
-          if (genuinelyLost) {
-            // another writer may be mutating the root NOW. A daemon
-            // cannot safely abort an arbitrary body mid-step; record
-            // the loss so withLease FAILS LOUD after the body instead
-            // of reporting a success that may have raced a second writer
-            lost.set(true)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"lease $path lost by $owner during maintenance — another " +
-                "writer may have stolen an expired lease; verify TTL vs " +
-                "maintenance duration")
-          }
+        if (!stop.get() && !renew(fs, path, owner, ttlMs, now) &&
+            renewLost(fs, path, owner, ttlMs, now)) {
+          // another writer may be mutating the root NOW. A daemon
+          // cannot safely abort an arbitrary body mid-step; record the
+          // loss so withLease FAILS LOUD after the body instead of
+          // reporting a success that may have raced a second writer
+          lost.set(true)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"lease $path lost by $owner during maintenance — another " +
+              "writer may have stolen an expired lease; verify TTL vs " +
+              "maintenance duration")
         }
       }
     }, "graft-lease-renewer")
