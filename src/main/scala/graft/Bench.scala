@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: per-query wall seconds at SPARK_GRAFT_SF_DIR.
   *
@@ -15,9 +14,7 @@ import org.apache.spark.sql.SparkSession
   *     frames are persisted-frame READS — the production shape for a
   *     pipeline that shares those frames across consumers.
   *   - between passes the session's persisted state is dropped and
-  *     rebuilt once (pass 1 rebuilds, pass 2 reuses) unless
-  *     GRAFT_BENCH_KEEP_STATE=1 keeps the round-2 behavior (state built
-  *     in pass 0 lives for the whole run).
+  *     rebuilt once (pass 1 rebuilds, pass 2 reuses).
   *
   * Output contract:
   *   - stdout, line 1: the full per-query contract line —
@@ -31,8 +28,10 @@ import org.apache.spark.sql.SparkSession
   *     ~2,000 chars) always ends with one complete, parseable JSON record
   *     that also self-identifies a contaminated window (gc/load).
   *   - target/bench.json: the FULL record (warm + cold + gc_sec + load +
-  *     pipeline_build), written atomically before the stdout lines. Stdout
-  *     tails get truncated; the file is the canonical artifact.
+  *     pipeline_build + errors), written atomically before the stdout
+  *     lines. Stdout tails get truncated; the file is the canonical
+  *     artifact. `errors` maps each failed query to its first failure's
+  *     `Class: message`, in the form of Verify's errors.json.
   *   - `gc_sec` (per-pass JVM collection-time delta) and `load` (per-pass
   *     1-min system load average at pass start, from the OS MXBean) make a
   *     contended run self-identifying: identical code with gc_sec or load
@@ -57,28 +56,23 @@ object Bench {
     m.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val keepState = sys.env.get("GRAFT_BENCH_KEEP_STATE").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "perfbench/data/sf0.01")
+    val spark = Main.session()
     // local-iteration filter (mirrors GRAFT_VERIFY_ONLY); driver runs unset
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def time(name: String): Double = {
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable =>
+        errors.getOrElseUpdate(name, Verify.describe(e))
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
-    def clearState(): Unit = if (!keepState) engine.SessionMemo.clear(spark)
     def pass(): (Map[String, Double], Double, Double) = {
       val g0 = gcMillis
       val l0 = loadAvg
@@ -87,7 +81,7 @@ object Bench {
     }
     val (cold, gcCold, loadCold) = pass() // cold: first execution + state builds
     val build = queries.Text.buildTimings(spark).toSeq.sortBy(_._1)
-    clearState()
+    engine.SessionMemo.clear(spark)
     val (r1, gc1, load1) = pass() // rebuilds memoized state once
     val (r2, gc2, load2) = pass() // steady state: persisted-frame reads
     val warm = names.map(n => n -> math.min(r1(n), r2(n))).toMap
@@ -111,6 +105,7 @@ object Bench {
       s""","cold":${fmt(cold)},"cold_total":${num(cold.values.sum)}""" +
       s""","pipeline_build":${obj(build)}""" +
       s""",$gcJson,$loadJson""" +
+      s""","errors":${Verify.jsonObj(errors.toSeq)}""" +
       s""","sf":"$sfDir"}"""
     val out = java.nio.file.Paths.get("target", "bench.json")
     java.nio.file.Files.createDirectories(out.getParent)

@@ -106,8 +106,14 @@ object Main {
       sys.exit(2)
   }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The one SparkSession every graft main runs on: `local[cpus]` with
+    * as many shuffle partitions, UTC, no UI, WARN logs and the graft
+    * functions registered. `cpus` is `SPARK_GRAFT_CPUS` when set, else
+    * the JVM's available processors.
+    */
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

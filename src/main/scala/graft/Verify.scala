@@ -17,6 +17,14 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** `{"k": "v", ...}` with both sides escaped by [[q]]. */
+  private[graft] def jsonObj(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+
+  /** A failure as `Class: message`, the message capped at 500 chars. */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+
   /** Runs every selected query, dumps results + oracle_sql.json +
     * errors.json under `outDir`; returns name → error for failed queries.
     * Failed queries are NOT silently absent from the artifacts: errors.json
@@ -34,15 +42,12 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+        errors(name) = describe(e)
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObj(SparkEntry.oracleSql.toSeq))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObj(errors.toSeq))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries failed: ${errors.keys.mkString(", ")}")
     errors.toMap
@@ -50,14 +55,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session()
     // local-iteration filter; the driver leaves this unset and gets all
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)

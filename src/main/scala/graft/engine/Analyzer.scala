@@ -86,6 +86,9 @@ final class Analyzer(
     Q.q(rawDf("simulations"), f).select("simulation_id").collect().map(_.getInt(0)).toSeq
   }
 
+  /** Frame names already warned about as unnarrowable: once per frame. */
+  private val unnarrowed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   private def narrowed(name: String, df: DataFrame): DataFrame =
     refilterIds match {
       case Some(ids) if df.columns.contains("simulation_id") =>
@@ -94,9 +97,10 @@ final class Analyzer(
         // A narrowing refilter is active but this output has no
         // simulation_id column — silently serving the broader stored-filter
         // aggregate would be wrong. Surface it loudly.
-        Analyzer.log.warn(
-          s"narrowing filter cannot be applied to '$name' (no simulation_id " +
-            "column): result covers the broader stored-filter simulation set")
+        if (unnarrowed.add(name))
+          Analyzer.log.warn(
+            s"narrowing filter cannot be applied to '$name' (no simulation_id " +
+              "column): result covers the broader stored-filter simulation set")
         df
       case _ => df
     }
@@ -200,14 +204,19 @@ final class FilteredAnalyzer(base: Analyzer, simIds: Seq[Int]) {
   def neuronClasses: DataFrame = base.neuronClasses
   def windows: DataFrame = f(base.windows)
   def report: DataFrame = f(base.report)
+  /** Feature outputs already warned about as unnarrowable: once per output. */
+  private val unnarrowed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   def calculateFeatures(): Map[String, DataFrame] =
     // mapFrames, not .map: keeps untouched sibling frames unconstructed
     base.calculateFeatures().mapFrames { (k, v) =>
-      if (!v.columns.contains("simulation_id"))
-        Analyzer.log.warn(
-          s"applyFilter cannot narrow feature output '$k' (no simulation_id " +
-            "column): it covers the unfiltered simulation set")
-      if (v.columns.contains("simulation_id")) f(v) else v
+      if (v.columns.contains("simulation_id")) f(v)
+      else {
+        if (unnarrowed.add(k))
+          Analyzer.log.warn(
+            s"applyFilter cannot narrow feature output '$k' (no simulation_id " +
+              "column): it covers the unfiltered simulation set")
+        v
+      }
     }
 }
 

@@ -55,8 +55,8 @@ object Lease {
   /** What [[read]] returns for a torn file: an expired corpse. */
   private[graft] val Torn: (String, Long) = ("", Long.MinValue)
 
-  /** Pause before a renewer re-reads a torn stamp: a rewrite in flight
-    * (create truncates, then writes) finishes well inside it.
+  /** Pause before a torn stamp is re-read: a rewrite in flight (create
+    * truncates, then writes) finishes well inside it.
     */
   private val TornRereadMs = 20L
 
@@ -99,6 +99,19 @@ object Lease {
       case _: NumberFormatException => Some(Torn)
     }
 
+  /** [[read]], except that a torn stamp is read once more after
+    * [[TornRereadMs]]: a live lease being rewritten reads as an empty
+    * file for a moment. A torn stamp that persists is a corpse. The
+    * pause throws InterruptedException to an interrupted caller.
+    */
+  private def readPastRewrite(fs: FileSystem, path: Path): Option[(String, Long)] =
+    read(fs, path) match {
+      case Some(Torn) =>
+        Thread.sleep(TornRereadMs)
+        read(fs, path)
+      case r => r
+    }
+
   private def write(
       fs: FileSystem, path: Path, owner: String, expiry: Long,
       overwrite: Boolean): Boolean =
@@ -134,7 +147,7 @@ object Lease {
       fs: FileSystem, path: Path, owner: String, ttlMs: Long,
       now: () => Long = () => System.currentTimeMillis()): Boolean =
     if (write(fs, path, owner, now() + ttlMs, overwrite = false)) true
-    else read(fs, path) match {
+    else readPastRewrite(fs, path) match {
       case Some((o, _)) if o == owner =>
         renew(fs, path, owner, ttlMs, now) // re-entrant acquire = renew
       case Some((_, exp)) if exp < now() =>
@@ -200,15 +213,9 @@ object Lease {
   private[graft] def renewLost(
       fs: FileSystem, path: Path, owner: String, ttlMs: Long,
       now: () => Long): Boolean = {
-    val stamp = read(fs, path) match {
-      case Some(Torn) =>
-        // a rewrite in flight reads as an empty file: look once more
-        // after a pause; a torn stamp that persists is a corpse
-        try Thread.sleep(TornRereadMs)
-        catch { case _: InterruptedException => return false } // stopping
-        read(fs, path)
-      case r => r
-    }
+    val stamp =
+      try readPastRewrite(fs, path)
+      catch { case _: InterruptedException => return false } // stopping
     stamp match {
       case Some((o, exp)) if o == owner =>
         // still ours: the renew WRITE blipped. Retry the re-stamp once;

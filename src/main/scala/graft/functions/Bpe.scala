@@ -241,15 +241,6 @@ object Bpe {
   private[graft] def tokenString(bytes: Array[Byte]): String =
     new String(bytes.map(b => byteToChar(b & 0xff)))
 
-  /** Token string → UTF-8 bytes (inverse of [[tokenString]]); fails loud
-    * on a char outside the published table (a malformed artifact).
-    */
-  private[graft] def tokenBytes(tok: String): Array[Byte] =
-    tok.toCharArray.map(c => charToByte.getOrElse(c,
-      throw new IllegalArgumentException(
-        s"not a GPT-2 byte-unicode token char: '$c' (U+${c.toInt.toHexString}) in '$tok'")
-    ).toByte)
-
   /** Render a trained merges table in the published merges.txt format
     * (one "left right" token-string pair per line, training order).
     */

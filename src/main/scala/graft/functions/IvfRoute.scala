@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * for quantizer-sized static state: plan literals re-serialize with
   * every task batch and break past ~thousands of cells, and a broadcast
   * JOIN materializes the children arrays into every joined row — the
-  * r15 RouteProfile measured that copy at ~√cells·dims·16 B PER QUERY
+  * r15 RouteProfile rows in BASELINE.md (the tool is in git history)
+  * measured that copy at ~√cells·dims·16 B PER QUERY
   * ROW (42 s for 20k queries at 65k cells), which this expression
   * eliminates entirely.
   */

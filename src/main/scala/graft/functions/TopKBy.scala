@@ -52,7 +52,8 @@ final class TopKBuffer(val k: Int) {
   * aggregate replaces them with a streaming O(k)-state insertion walk
   * inside a hash aggregate: no sort, no spill, same bounded exchange
   * (measured: v1 brute 466 s → 62.6 s, v10 ADC 117 s → 64 s at x100;
-  * shuffle rows identical to the window's, see tools/CapProfile).
+  * shuffle rows identical to the window's: BASELINE.md, Round-13
+  * CapProfile entry; the tool is in git history).
   * Ties break on id, matching the window's deterministic ORDER BY.
   */
 case class TopKBy(

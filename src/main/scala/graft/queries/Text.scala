@@ -71,7 +71,8 @@ object Text {
     * array, the collapsed plan re-evaluates the WHOLE array expression
     * per output element — per-doc QUADRATIC string work (measured on
     * sf0.1: 6.2 s to explode 250k 5-grams vs 0.07 s for the position
-    * form; ShingleDiag reproduces both). The `ts` column is referenced
+    * form, measured with the ShingleDiag tool, in git history). The `ts`
+    * column is referenced
     * twice below, which also keeps the tokenizer projection from being
     * inlined into the generator.
     */
@@ -258,7 +259,8 @@ object Text {
     * (shingle → dfreq + the ≤50 smallest doc ids) plus the per-doc gram
     * counts, memoized + persisted. r20 persisted the raw 8-gram frame
     * and t19 still re-ran the df-join + posting self-join machinery over
-    * it every call — 17-18 task-seconds warm (QDiag), the single most
+    * it every call — 17-18 task-seconds warm (OPTIMIZATION_r21.md, t19;
+    * measured with the QDiag tool, in git history), the single most
     * compute-expensive warm query in the suite. Grouping by shingle ONCE
     * here turns the pair stage into a map-side explode over sorted
     * id lists (the Lsh.cappedPairs shape): the self-join, the df join
@@ -453,9 +455,6 @@ object Text {
   private def indexBuckets(nDocs: Long): Int =
     math.max(8L, (nDocs * 4 + 499999) / 500000).toInt
 
-  private[graft] def indexBucketsForTesting(nDocs: Long): Int =
-    indexBuckets(nDocs)
-
   /** A document frame's LSH signatures in the index layout `(bk, doc_id)`
     * with the flattened band key `bk = band|bkey` — the row format the
     * persisted index stores and shards join on ([[graft.sources.Bucketed]]
@@ -486,8 +485,8 @@ object Text {
     rowLshKeysAt(docs, bands = 4, depth = 2)
 
   /** [[rowLshKeys]] at an arbitrary banding — the scale-study form
-    * (IncrProfile varies depth, which the t18 machinery tunes in
-    * production; the gates stay oracle-locked at 4×2). Slot `j`'s salted
+    * (the x1000 study in BASELINE.md varies depth, which the t18
+    * machinery tunes in production; the gates stay oracle-locked at 4×2). Slot `j`'s salted
     * minhash is `array_min` over the per-row shingle array; band `b`
     * concatenates its own `depth` slots `[depth·b, depth·b+depth)`.
     * The aggregate (`lshBuckets`) form computes identical rows but plans
@@ -579,7 +578,8 @@ object Text {
     * everything beyond the cap counted on the `graft_t26_index_cap`
     * observe metric — the same capped-never-silent contract as
     * [[Lsh.cappedPairs]]. The cap is the skew BACKSTOP, not the tuning
-    * knob: the x1000 study (BASELINE.md, IncrProfile) measured the
+    * knob: the x1000 study (BASELINE.md, Round-14 incremental
+    * maintenance; the IncrProfile tool is in git history) measured the
     * oracle-locked 4×2 banding's chance buckets reaching 5,415 docs on a
     * 4.5M-doc corpus, which explodes the probe join to 45M candidate
     * pairs; a production build tunes band depth from measured occupancy
@@ -1696,7 +1696,8 @@ object Text {
     // corpus-wide sorts spill; the aggregate ranks with an O(25)-state
     // insertion walk and no sort at all. Both forward ≤25 (hash, id)
     // pairs per (map task, source) to the one exchange (measured
-    // identical shuffle rows: tools/CapProfile). ----
+    // identical shuffle rows: BASELINE.md, Round-13 CapProfile entry;
+    // the tool is in git history). ----
     GQuery(
       "t22_source_cap",
       """SELECT source, doc_id, rk FROM (
@@ -2744,15 +2745,6 @@ object Text {
     * plan-shape reasoning (single corpus scan, shared persisted frames,
     * one source exchange for cap+pack).
     */
-  /** Diag access: the composed release over an explicit loser set. */
-  private[graft] def pipelineReleaseForDiag(
-      s: SparkSession, dir: String, losers: DataFrame): DataFrame =
-    pipelineRelease(s, dir, losers)
-
-  /** Diag access: the memoized persisted shingle frame. */
-  private[graft] def persistedShinglesForDiag(
-      s: SparkSession, dir: String): DataFrame = persistedShingles(s, dir)
-
   /** Spec access: the shared jaccard-scored candidate pairs — the
     * confirmed-pair source the t18 superset invariant checks against
     * (Md5AutoDepthInvariantsSpec ratifies the md5 family the same way).

@@ -492,8 +492,9 @@ object Vectors {
 
   /** THE index-build recipe — label-cell centroid training + clustered
     * cell-partitioned vector write — shared by the persisted index (v7),
-    * the maintained index's base (v13), and the IvfMaintProfile tool (so
-    * the tool's insert-vs-rebuild ratios always time the shipped shape).
+    * and the maintained index's base (v13), so the insert-vs-rebuild
+    * ratios in BASELINE.md (IvfMaintProfile rows; the tool is in git
+    * history) timed the shipped shape.
     * Clustering by cell BEFORE the partitioned write matters: without it
     * every input task writes a file into every cell directory —
     * cells × tasks files (the x1000 decade measured a 13-minute build
@@ -738,8 +739,8 @@ object Vectors {
     * (residual adc, residual refine)). The isolation experiment for the
     * r18 finding that raw-vector PQ can't order within a cell — routing
     * is held exact so the ONLY variable is what the 8 bytes encode.
-    * Driven by ResidualRecallProbe (x-decade rows in BASELINE) and
-    * ResidualPqSpec (gate-scale floor).
+    * Driven by ResidualPqSpec (gate-scale floor); the x-decade rows in
+    * BASELINE.md came from the ResidualRecallProbe tool, in git history.
     */
   private[graft] def measureResidualRecall(
       s: SparkSession, dir: String,
@@ -1107,7 +1108,8 @@ object Vectors {
     * the FROZEN trained coarse quantizer (centroids do not move on
     * insert), with DELTA BATCHING between arrival and the per-cell
     * layout: inserts land in a delta-sized STAGING table first (one
-    * append whose cost ∝ delta bytes — AppendProbe measured the direct
+    * append whose cost ∝ delta bytes — BASELINE.md's AppendProbe rows
+    * (the tool is in git history) measured the direct
     * per-cell append paying a ~15-20 ms metadata floor PER OUTPUT FILE ×
     * ~600 cells, which loses to a full rebuild below x1000); cells whose
     * staged volume reaches block size flush to per-cell appended files,
@@ -2077,8 +2079,9 @@ object Vectors {
       // centroid frame + cell count memoized per (session, dir) like the
       // other shared vector frames (r21): v5 re-derived the two-level
       // centroid aggregation AND ran a separate distinct-count action
-      // every invocation — QDiag measured 16 jobs at 0.11 warm
-      // task-seconds, i.e. pure per-action driver overhead
+      // every invocation — 16 jobs at 0.11 warm task-seconds, i.e. pure
+      // per-action driver overhead (OPTIMIZATION_r21.md, v5; measured
+      // with the QDiag tool, in git history)
       val (centArr, nCells) = persistedCentArr(s, dir)
       // routeQueries: flat broadcast argmax with the oracle's exact
       // tiebreak (dp DESC, cell ASC) at this cell count; hierarchical
@@ -2192,8 +2195,9 @@ object Vectors {
     // resolution (the lever the measured recall ceiling named). The
     // whole train/assign/distance-table chain re-derives from (M, sub)
     // on BOTH engines, so the doubled-byte geometry is hash-exact
-    // against DuckDB like v10, not merely plausible; the recall-vs-
-    // bytes tradeoff rows live in BASELINE.md (PqVariantsProfile). ----
+    // against DuckDB like v10, not merely plausible. [[pqVariantEval]]
+    // prices one (encoding, M) variant; the recall-vs-bytes sweep over
+    // it was run with the PqVariantsProfile tool, in git history. ----
     GQuery("v20_pq_adc_m16", pqOracleSqlM(16, 4)) { (s, dir) =>
       registered(s)
       val (codesArr, dtabArr) = pqEncodeM(s, dir, 16)
@@ -2214,10 +2218,9 @@ object Vectors {
     // objective — OPQ warm-starts at R = I, so monotonicity makes the
     // improvement a theorem, not a hope; (4) the DISTRIBUTED rotation
     // plumbing round-trips: rotating the whole corpus by R and back by
-    // Rᵀ reproduces every embedding (the corpus-scale encode path the
-    // profile tool prices runs through exactly this map). Measured
-    // recall/error per (encoding, M) lives in BASELINE.md
-    // (PqVariantsProfile), where data-dependent numbers belong. ----
+    // Rᵀ reproduces every embedding (the corpus-scale encode path
+    // [[pqVariantEval]] prices runs through exactly this map). OpqSpec
+    // checks the data-dependent error and recall. ----
     GQuery(
       "v21_opq_invariants",
       """SELECT CAST(0 AS BIGINT) AS orth_violations,
@@ -2234,7 +2237,29 @@ object Vectors {
       val improved =
         if (res.objectives.last <= res.objectives.head * (1 + 1e-12)) 1L
         else 0L
-      val rt = opqRoundtripViolationsForDiag(s, dir, res)
+      // distributed roundtrip: rotate by R, back by Rᵀ, count rows whose
+      // max |diff| exceeds 1e-6. Spread before the rotation kernels (r21):
+      // the sf-scale embeddings parquet is ONE input split, so the two
+      // chained 64×64 matmul UDFs ran as a single serial task. The UDF is
+      // marked non-deterministic because deterministic projections (and
+      // the filter referencing them) get pushed BELOW the round-robin
+      // repartition, landing the whole kernel back in the single scan
+      // task (the 1-task map stage carried 1.0 of the job's 1.3
+      // task-seconds after the spread alone; OPTIMIZATION_r21.md, v21;
+      // the OpqDiag tool is in git history). The function is genuinely
+      // deterministic, so results are unchanged.
+      def rotNd(c: Column, r: Array[Array[Double]]): Column =
+        rotateUdf(r).asNondeterministic()(c.cast("array<double>"))
+      val rt = spreadToCores(
+          Tables.embeddings(s, dir).select("vec_id", "embedding"))
+        .withColumn("rv", rotNd(col("embedding"), res.r))
+        .withColumn("back", rotNd(col("rv"), transposed(res.r)))
+        .filter(expr(
+          """aggregate(zip_with(embedding, back,
+            |  (a, b) -> abs(CAST(a AS DOUBLE) - b)),
+            |  CAST(0 AS DOUBLE), (acc, x) -> greatest(acc, x))"""
+            .stripMargin) > 1e-6)
+        .count()
       Seq((orthViol, monoViol, improved, rt)).toDF(
         "orth_violations", "monotone_violations", "improved_vs_identity",
         "roundtrip_violations")
@@ -2950,7 +2975,8 @@ object Vectors {
     * per-row bytes are copied at all. Work per row ≈ 2·√cells fused dots
     * — the batch hierarchy's cost model, now per arriving row. (The
     * first cut resolved children via two broadcast equi-joins against a
-    * one-row-per-super frame; RouteProfile measured the joins
+    * one-row-per-super frame; BASELINE.md's RouteProfile rows (the tool
+    * is in git history) measured the joins
     * materializing ~√cells·dims·16 B into EVERY query row — 42 s for
     * 20k queries at 65k cells, near-linear in cells — so the join form
     * was replaced by this expression.)
@@ -3241,7 +3267,7 @@ object Vectors {
         s"transform(sequence(0, ${m * PqK - 1}), " +
           "i -> coalesce(element_at(dm, i), CAST('Infinity' AS DOUBLE)))").as("darr"): _*)
 
-  // ---- OPQ support (v21 + PqVariantsProfile) ----
+  // ---- OPQ support (v21 + OpqSpec) ----
 
   /** The memoized OPQ training result per (session, dir): driver-side
     * alternating solver over the vec-id-ordered sample (bounded by
@@ -3294,38 +3320,6 @@ object Vectors {
   private[graft] def rotated(c: Column, r: Array[Array[Double]]): Column =
     rotateUdf(r)(c.cast("array<double>"))
 
-  /** v21's distributed roundtrip check (rotate by R, back by Rᵀ, count
-    * rows whose max |diff| exceeds 1e-6) — extracted so OpqDiag can time
-    * it apart from the gate's driver-side invariant arithmetic. Spread
-    * before the rotation kernels (r21): the sf-scale embeddings parquet
-    * is ONE input split, so the two chained 64×64 matmul UDFs ran as a
-    * single serial task — same single-split pathology as the multimodal
-    * codec maps; a scan that already has enough partitions keeps them.
-    * The rotation UDF here is marked non-deterministic for exactly the
-    * guide's §4.4 reason inverted: deterministic projections (and the
-    * filter referencing them) get pushed BELOW the round-robin
-    * repartition, landing the whole kernel back in the single scan task
-    * (OpqDiag measured the 1-task map stage carrying 1.0 of the job's
-    * 1.3 task-seconds after the spread alone). Non-determinism pins the
-    * kernels above the exchange; the function is genuinely deterministic,
-    * so results are unchanged.
-    */
-  private[graft] def opqRoundtripViolationsForDiag(
-      s: SparkSession, dir: String, res: Opq.Result): Long = {
-    def rotNd(c: Column, r: Array[Array[Double]]): Column =
-      rotateUdf(r).asNondeterministic()(c.cast("array<double>"))
-    spreadToCores(
-        Tables.embeddings(s, dir).select("vec_id", "embedding"))
-      .withColumn("rv", rotNd(col("embedding"), res.r))
-      .withColumn("back", rotNd(col("rv"), transposed(res.r)))
-      .filter(expr(
-        """aggregate(zip_with(embedding, back,
-          |  (a, b) -> abs(CAST(a AS DOUBLE) - b)),
-          |  CAST(0 AS DOUBLE), (acc, x) -> greatest(acc, x))"""
-          .stripMargin) > 1e-6)
-      .count()
-  }
-
   /** Repartition a compute-bound frame to the cluster's cores when its
     * scan produced fewer partitions (the multimodal codec-map rule): a
     * single-split parquet read otherwise runs every per-row kernel above
@@ -3340,7 +3334,7 @@ object Vectors {
   private[graft] def transposed(r: Array[Array[Double]]): Array[Array[Double]] =
     Array.tabulate(r.length, r.length)((i, j) => r(j)(i)).map(_.toArray)
 
-  /** One (encoding, M) variant priced end-to-end for PqVariantsProfile:
+  /** One (encoding, M) variant priced end-to-end (OpqSpec):
     * train the engine's distributed PQ chain at geometry (m, dim/m)
     * over raw or OPQ-rotated embeddings, returning
     * (corpus quantization error — decimal-exact sum, run-to-run
@@ -3348,7 +3342,7 @@ object Vectors {
     * rotation-invariant, so one raw-space truth serves every variant).
     */
   /** @param premix corpus-wide pre-rotation simulating CORRELATED
-    *               features (PqVariantsProfile's mixed mode — GenScale
+    *               features (the mixed mode — GenScale
     *               dims are independent by construction, the geometry
     *               OPQ cannot improve); applied before `rot`
     * @param rot    the learned OPQ rotation (None = plain PQ)
@@ -3428,8 +3422,8 @@ object Vectors {
   /** The memoized variable-M PQ state (v20's byte-budget knob): the
     * default-geometry chain at an explicit sub-quantizer count, dim/m
     * dims per subspace. No cell column — the knob gate is full-corpus
-    * ADC (v10's scope); the IVF-composed variants price through
-    * [[graft.tools.PqVariantsProfile]].
+    * ADC (v10's scope); [[pqVariantEval]] prices the recall of an
+    * (encoding, M) variant.
     */
   private val pqMCache =
     Memo.frames[(String, Int), (DataFrame, DataFrame)]("pq_m")(v => Seq(v._1, v._2))
@@ -3611,21 +3605,6 @@ object Vectors {
     * single exchange. Cells are disjoint vector sets (cell = label), so
     * the downstream candidate union needs no dedupe.
     */
-  /** v16's subplans (queries, centroids, route, dtab, codes), factored
-    * for the gate body and stage-level diagnosis.
-    */
-  private[graft] def v16Pieces(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    registered(s)
-    val e = Tables.embeddings(s, dir)
-    val (cent, _, codes, cb, _) = residualPq(s, dir)
-    val q = e.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val route = multiRoute(q, cent, nprobe = multiNprobe(s, ivfIndex(s, dir)))
-    val dtab = residualMultiDtab(q, cent, route, cb)
-    (q, cent, route, dtab, codes)
-  }
-
   /** The single-cell residual probe (q_id, cell, darr) via ONE map-side
     * broadcast-state expression — the serving derivation the batch
     * residual gates (v15/v17/v19) share with their streaming twins

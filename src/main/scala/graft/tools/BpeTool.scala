@@ -57,13 +57,7 @@ object BpeTool {
         s"${FixtureTexts.size} fixture rows to $out")
 
     case "profile" =>
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .appName("graft-bpe-profile")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = graft.Main.session()
       import org.apache.spark.sql.functions._
       val sample = graft.Tables.documents(spark, args(1))
         .select(col("text"), col("doc_id"))
@@ -125,13 +119,7 @@ object BpeTool {
       // distributed pieces-explode → groupBy → count pass (the only
       // corpus-sized stage of a training run), and the driver trainer
       // over the collected vocab-sized table at realistic merge counts
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .appName("graft-bpe-corpus")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = graft.Main.session()
       def time3[T](what: String)(f: => T): T = {
         val t0 = System.nanoTime()
         val r = f

@@ -30,14 +30,7 @@ object GenScale {
     val tables = sys.env.get("GRAFT_TABLES")
       .map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set("documents", "embeddings", "events", "lineitem"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Main.session()
     multipliers.foreach(m => generate(spark, s"$outBase/x$m", m, tables))
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Second-process residual-serving probe (VERDICT r18 next #1's
@@ -19,13 +18,7 @@ import org.apache.spark.sql.functions._
 object ResidualServeProbe {
   def main(args: Array[String]): Unit = {
     val root = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-residual-serve-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Main.session()
     val (cent, nCells, codes, _, cbRows) =
       graft.queries.Vectors.residualPqOpen(spark, root)
     // one served probe: the root's own first few vectors as queries,

@@ -8,11 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-/** A renewer that reads its lease while the file is being rewritten (a
-  * rewrite truncates, then writes) sees an empty, torn stamp. That is not
-  * a lost lease: the renewer looks again after a pause. A torn stamp that
-  * persists still counts as lost. The tear is injected by the filesystem,
-  * so no test here depends on a race.
+/** A renewer or a would-be stealer that reads a lease while the file is
+  * being rewritten (a rewrite truncates, then writes) sees an empty, torn
+  * stamp. That is neither a lost lease nor an expired one: the reader
+  * looks again after a pause. A torn stamp that persists still counts as
+  * a corpse. The tear is injected by the filesystem, so no test here
+  * depends on a race.
   */
 class LeaseTornReadSpec extends AnyFunSuite {
 
@@ -65,6 +66,17 @@ class LeaseTornReadSpec extends AnyFunSuite {
       assert(Lease.acquire(fs, p, "me", 500L, now))
       fs.tears.set(2)
       assert(Lease.renewLost(fs, p, "me", 500L, now))
+    }
+  }
+
+  test("acquire reads another owner's live lease mid-rewrite as live, not as a corpse") {
+    withFs { (fs, p) =>
+      val now = () => 1000L
+      assert(Lease.acquire(fs, p, "other", 500L, now))
+      fs.tears.set(1)
+      assert(!Lease.acquire(fs, p, "me", 500L, now),
+        "a live lease read mid-rewrite was stolen")
+      assert(Lease.read(fs, p) === Some(("other", 1500L)))
     }
   }
 

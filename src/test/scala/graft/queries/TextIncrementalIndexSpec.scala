@@ -143,7 +143,7 @@ class TextIncrementalIndexSpec extends SparkSuite {
     assert(viaRow.exceptAll(viaAgg).isEmpty && viaAgg.exceptAll(viaRow).isEmpty,
       "rowLshKeys diverges from the aggregate signature form")
 
-    // and at a non-default banding (IncrProfile's variable-depth probes)
+    // and at a non-default banding (the x1000 study's variable-depth probes, BASELINE.md)
     val aggD3 = Text.lshBuckets(sh, bands = 3, rowsPerBand = 3)
       .select(concat_ws("|", col("band"), col("bkey")).as("bk"), col("doc_id"))
     val rowD3 = Text.rowLshKeysAt(graft.Tables.documents(s, sf0001), 3, 3)

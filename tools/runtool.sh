@@ -1,7 +1,9 @@
 #!/bin/bash
-# Run a compiled graft main class directly on the Spark jars, bypassing the
-# sbt launcher (and its project lock): tools and profiles can run while sbt
-# compiles or tests in another terminal. Usage: tools/runtool.sh <MainClass> [args...]
+# Run a compiled graft main class (graft.Verify, graft.Bench, graft.Main or
+# one of graft.tools.{GenScale,BpeTool,ResidualServeProbe}) directly on the
+# Spark jars, bypassing the sbt launcher and its project lock, so a main can
+# run while sbt compiles or tests in another terminal. Compile first
+# (sbt compile). Usage: tools/runtool.sh <MainClass> [args...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLASSES=target/scala-2.13/classes
